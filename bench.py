@@ -371,38 +371,6 @@ def bench_bloom_lookup(spark, sf_dir) -> list[float]:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def bench_dv_delete(spark, sf_dir) -> list[float]:
-    """Merge-on-read delete batch (PLANS §7q on the bench cadence):
-    the same 30-key batch shape as cdc_merge_small_batch, but all
-    deletes on a delete_vectors=True table — sidecar append + pruned
-    version read, zero bucket rewrites.  Compare against
-    cdc_merge_small_batch to watch the copy-on-write/merge-on-read
-    gap at this bucket size per round."""
-    orders = (load_table(spark, sf_dir, "orders")
-              .withColumn("load_timestamp",
-                          F.to_timestamp(F.lit("2024-01-01 00:00:00"))))
-    tmp = tempfile.mkdtemp(prefix="bench_dv_")
-    try:
-        kt = KeyedTable(spark, f"{tmp}/orders", ["o_orderkey"],
-                        num_buckets=64, delete_vectors=True)
-        kt.init(orders)
-        (orders.where("o_orderkey % 5000 = 17")   # ~30 keys
-         .withColumn("Op", F.lit("D"))
-         .withColumn("load_timestamp",
-                     F.to_timestamp(F.lit("2024-06-01 00:00:00")))
-         .coalesce(1).write.parquet(f"{tmp}/batch"))
-        b = spark.read.parquet(f"{tmp}/batch")
-        kt.merge_batch(b, version_col="load_timestamp")     # warm
-        samples = []
-        for _ in range(N_REPS_MERGE):
-            t0 = time.time()
-            kt.merge_batch(b, version_col="load_timestamp")
-            samples.append(time.time() - t0)
-        return samples
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def bench_stats_scan(spark, sf_dir) -> list[float]:
     """Zone-map pruned range scan (PLANS §7r on the bench cadence):
     a 3-month date probe over a range-clustered orders snapshot
@@ -548,10 +516,9 @@ def bench_mor_upsert(spark, sf_dir) -> tuple[list[float], list[float]]:
     batch shape as cdc_merge_small_batch, version-gated, on a
     delta_upserts=True table — gate probe + log append, ZERO bucket
     rewrites.  Compare against cdc_merge_small_batch to watch the
-    copy-on-write/merge-on-read gap for upserts per round (the DV row
-    already tracks it for deletes).  Also returns one fold sample: the
-    deferred cost of physically applying the accumulated reps' log
-    (∝ logged keys' buckets)."""
+    copy-on-write/merge-on-read gap for upserts per round.  Also
+    returns one fold sample: the deferred cost of physically applying
+    the accumulated reps' log (∝ logged keys' buckets)."""
     orders = (load_table(spark, sf_dir, "orders")
               .withColumn("load_timestamp",
                           F.to_timestamp(F.lit("2024-01-01 00:00:00"))))
@@ -799,14 +766,6 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         print(f"fleet bench failed: {exc}", file=sys.stderr)
         fleet_fps = 0.0
-    # round 7 — shielded, reported outside `queries`
-    try:
-        dv_samples = bench_dv_delete(spark, sf_dir)
-        dv_delete = round(min(dv_samples), 3)
-        dispersion["cdc_dv_delete_batch"] = summarize(dv_samples)
-    except Exception as exc:  # noqa: BLE001
-        print(f"dv bench failed: {exc}", file=sys.stderr)
-        dv_delete = 0.0
     # round 8 — shielded, reported outside `queries`
     try:
         st_samples = bench_stats_scan(spark, sf_dir)
@@ -884,7 +843,6 @@ def main() -> None:
         "cdc_bloom_lookup": bloom_lookup,
         "joinview_fact_leg": jv_fact,
         "joinview_dim_leg": jv_dim,
-        "cdc_dv_delete_batch": dv_delete,
         "cdc_stats_scan": stats_scan,
         "cdc_compact_small_files": compact_run,
         "cdc_mor_upsert_batch": mor_upsert,

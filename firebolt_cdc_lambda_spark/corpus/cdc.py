@@ -626,18 +626,18 @@ FROM facts f ASOF LEFT JOIN dim d
 """
 
 
-# -- merge-on-read delete vectors under the oracle ------------------------
-# KeyedTable(delete_vectors=True): the round-7 sidecar-delete mode
-# end-to-end — (1) a delete-only batch lands as __dv entries (zero
-# buckets rewritten — asserted, not just claimed: a nonzero return
-# raises), (2) a STALE update file arrives late: keys whose delete is
-# newer are gated BY THE SIDECAR ENTRY's version while sibling keys
-# with no entry land normally (mixed fate in one batch), (3) a fresh
-# update REVIVES two deleted keys (entries cleaned), then (4)
-# fold_delete_vectors physically applies the remaining entries — the
-# final read must be identical before and after the fold, and the
-# oracle restates the net effect relationally.  Wrong gating, a lost
-# revival, or a fold dropping the wrong rows all hash-mismatch.
+# -- the out-of-order delete contract under the oracle --------------------
+# KeyedTable(tombstones=True) end-to-end (the query keeps its name from
+# the retired delete-vector mode, whose visible contract this is) —
+# (1) a delete-only batch lands as tombstone markers, (2) a STALE
+# update file arrives late: keys whose delete is newer are gated BY THE
+# MARKER's version while sibling keys with no marker land normally
+# (mixed fate in one batch), (3) a fresh update REVIVES two deleted
+# keys, then (4) purge_tombstones physically drops the remaining
+# markers older than the cutoff — the final read must be identical
+# before and after the purge, and the oracle restates the net effect
+# relationally.  Wrong gating, a lost revival, or a purge dropping the
+# wrong rows all hash-mismatch.
 def cdc_delete_vectors(spark, sf):
     import tempfile
 
@@ -648,19 +648,18 @@ def cdc_delete_vectors(spark, sf):
                       "o_totalprice")
               .withColumn("load_timestamp",
                           F.to_timestamp(F.lit("2024-01-01 00:00:00"))))
-    tmp = tempfile.mkdtemp(prefix="cdc_dv_q_")   # left for OS cleanup
+    tmp = tempfile.mkdtemp(prefix="cdc_del_q_")   # left for OS cleanup
     kt = KeyedTable(spark, f"{tmp}/orders", ["o_orderkey"],
-                    num_buckets=16, delete_vectors=True)
+                    num_buckets=16, tombstones=True)
     kt.init(orders)
-    # (1) delete-only batch at t2: zero buckets may be rewritten
+    # (1) delete-only batch at t2: the deleted keys become markers
     dels = (orders.where("o_orderkey % 100 < 5")
             .withColumn("load_timestamp",
                         F.to_timestamp(F.lit("2024-01-02 00:00:00")))
             .withColumn("Op", F.lit("D")))
-    if kt.merge_batch(dels, version_col="load_timestamp") != 0:
-        raise AssertionError("delete-only DV batch rewrote a bucket")
-    # (2) stale update file (t1 < t2): %100<5 gated by the DV entries,
-    # %100 in 5..9 has no entry and lands
+    kt.merge_batch(dels, version_col="load_timestamp")
+    # (2) stale update file (t1 < t2): %100<5 gated by the markers,
+    # %100 in 5..9 has no marker and lands
     stale = (orders.where("o_orderkey % 100 < 10")
              .withColumn("o_totalprice", F.col("o_totalprice") * 1.5)
              .withColumn("load_timestamp",
@@ -674,9 +673,10 @@ def cdc_delete_vectors(spark, sf):
                          F.to_timestamp(F.lit("2024-01-03 00:00:00")))
              .withColumn("Op", F.lit("U")))
     kt.merge_batch(fresh, version_col="load_timestamp")
-    # (4) fold the remaining entries (0, 1, 4): visible state unchanged
+    # (4) purge the remaining markers (0, 1, 4): visible state unchanged
     import datetime as _dt
-    kt.fold_delete_vectors(before_version=_dt.datetime(2024, 1, 3))
+    kt.purge_tombstones(before_version=_dt.datetime(2024, 1, 3),
+                        version_col="load_timestamp")
     return kt.read().select("o_orderkey", "o_custkey", "o_orderstatus",
                             "o_totalprice")
 
@@ -1470,11 +1470,11 @@ QUERIES = {
         "half the composite key — apply == rebuild under the hash"),
     "cdc_delete_vectors": Query(
         cdc_delete_vectors, CDC_DELETE_VECTORS_SQL,
-        "merge-on-read delete vectors: delete-only batch lands as "
-        "sidecar entries (zero buckets rewritten, asserted), stale "
-        "updates gated BY the entries while un-entried siblings land, "
-        "fresh updates revive, fold applies physically — final read "
-        "hash-matched against the relational restatement"),
+        "out-of-order delete contract on tombstones: delete-only batch "
+        "lands as markers, stale updates gated BY the markers while "
+        "unmarked siblings land, fresh updates revive, the purge drops "
+        "old markers physically — final read hash-matched against the "
+        "relational restatement"),
     "cdc_stats_prune": Query(
         cdc_stats_prune, CDC_STATS_PRUNE_SQL,
         "zone-map (per-file min/max) pruned range scan on a NON-key "

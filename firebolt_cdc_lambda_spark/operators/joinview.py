@@ -95,17 +95,15 @@ class JoinView:
         # composite: on the fused hash column the view materializes
         self._bloom_col = FUSED_FK_COL if self.composite else self.fks[0]
         # the view inherits the fact table's delete-protection mode
-        # (tombstone markers OR delete-vector sidecar): without one, a
-        # fact key deleted and then referenced by a STALE late batch
-        # would be resurrected in the view even though the fact table's
-        # own gate blocked it — the view would silently desync until a
-        # rebuild (stored view meta still wins over this default, as
-        # everywhere)
+        # (tombstone markers): without it, a fact key deleted and then
+        # referenced by a STALE late batch would be resurrected in the
+        # view even though the fact table's own gate blocked it — the
+        # view would silently desync until a rebuild (stored view meta
+        # still wins over this default, as everywhere)
         self.table = KeyedTable(
             spark, path, fact.keys,
             num_buckets=num_buckets or fact.num_buckets,
-            tombstones=fact.tombstones,
-            delete_vectors=fact.delete_vectors)
+            tombstones=fact.tombstones)
 
     # -- naming ------------------------------------------------------------
     def _enrich_cols(self) -> list[str]:
@@ -218,17 +216,6 @@ class JoinView:
             self.table.rewrite(full)
         else:
             self.table.init(full)
-        if self.table.delete_vectors and self.fact.delete_vectors:
-            # the delete-vector analogue of the tombstone-copy above:
-            # adopt the FACT's sidecar entries wholesale, so (a) the
-            # view's out-of-order gate matches the fact's exactly after
-            # the rebuild and (b) stale view entries from missed batches
-            # (the desync rebuild exists to repair) are REPLACED — a
-            # leftover entry for a key the fact since revived would
-            # otherwise hide a legitimately-rebuilt row.  init/rewrite
-            # above rebuilt from fact.read(), which already excludes the
-            # fact's DV'd rows, so entries and rows stay consistent.
-            self.table._write_dv(self.fact._read_dv())
         BloomIndex(self.table, self._bloom_col).build()
 
     # -- delta legs --------------------------------------------------------

@@ -115,8 +115,8 @@ def _q(name: str) -> str:
 
 def _is_delete_sql(op_col: str, delete_values: Sequence[str]) -> str:
     """The CDC delete predicate as SQL, shared by merge_cdc and the
-    delete-vector merge path — ONE definition so the two delete gates
-    can never classify a row differently (review finding, round 7).
+    delta-log append — ONE definition so the two delete gates can
+    never classify a row differently (review finding, round 7).
     NULL-safe (a NULL Op is an upsert); delete_values are strings by
     contract with quote/backslash escaping for Spark's parser."""
     vals = ", ".join(
@@ -128,16 +128,10 @@ def _is_delete_sql(op_col: str, delete_values: Sequence[str]) -> str:
 def _key_cond_sql(keys: Sequence[str], left: str, right: str) -> str:
     """The null-safe key-equality predicate as SQL — THE one copy
     (review finding, round 10: seven verbatim rebuilds had grown across
-    the eager/DV/delta paths; a future change to the condition must not
+    the eager/delta merge paths; a future change to the condition must not
     be appliable to six of them)."""
     return " AND ".join(
         f"{left}.{_q(k)} <=> {right}.{_q(k)}" for k in keys)
-
-
-def _key_cond(keys: Sequence[str], left: str, right: str) -> Column:
-    # the Column form of _key_cond_sql (same null-safe semantics; the
-    # SQL form quotes names and is preferred for new call sites)
-    return F.expr(_key_cond_sql(keys, left, right))
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -330,7 +324,8 @@ def merge_cdc(
     matched_keys = (target.select(*keys).alias("t")
                     .join(F.broadcast(s), cond, "left_semi"))
     ins = insert_src.alias("s").join(F.broadcast(matched_keys).alias("t"),
-                                     _key_cond(keys, "s", "t"), "left_anti")
+                                     F.expr(_key_cond_sql(keys, "s", "t")),
+                                     "left_anti")
     def insert_expr(c: str) -> str:
         ty = target.schema[c].dataType.simpleString()
         if tombstones and c == TOMBSTONE_COL:
@@ -365,10 +360,6 @@ class KeyedTable:
 
     EPOCH_COL = "_epoch"
 
-    #: delete-vector sidecar version column (stores the delete's version
-    #: so later stale writes stay gated, exactly like a tombstone's)
-    DV_VERSION_COL = "_dv_version"
-
     #: delta-log sidecar columns (merge-on-read upserts): batch sequence
     #: (newest-key-wins tiebreak across batches) and the delete marker
     DELTA_SEQ_COL = "_delta_seq"
@@ -387,8 +378,7 @@ class KeyedTable:
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
                  num_buckets: int = 64, tombstones: bool = False,
-                 versioned: bool = False, delete_vectors: bool = False,
-                 delta_upserts: bool = False):
+                 versioned: bool = False, delta_upserts: bool = False):
         self.spark = spark
         # normalized: the clone registry and root-tagged manifest refs
         # compare roots by STRING, so "wh/t" and "wh/t/" must be the
@@ -398,17 +388,14 @@ class KeyedTable:
         self.num_buckets = num_buckets
         self.tombstones = tombstones
         self.versioned = versioned
-        self.delete_vectors = delete_vectors
         self.delta_upserts = delta_upserts
         # The stored table's own bucket count (and tombstone/versioned/
-        # delete-vector mode) always wins over the constructor arguments:
-        # a merger configured with a stale count would prune against
+        # delta mode) always wins over the constructor arguments: a
+        # merger configured with a stale count would prune against
         # wrong bucket ids and silently lose keys; a merger unaware of
         # tombstone mode would physically delete rows another writer
         # relies on for version gating; a merger unaware of versioned
-        # mode would dynamic-overwrite epoch history away; a merger
-        # unaware of delete-vector mode would physically rewrite buckets
-        # for deletes another reader hides through the sidecar.
+        # mode would dynamic-overwrite epoch history away.
         self.table_version = 0
         self.delta_seq = 0
         #: last log sequence already folded into the base: the fleet's
@@ -434,15 +421,25 @@ class KeyedTable:
                 # reader-only handles (register_warehouse, ad-hoc
                 # inspection) may construct with keys=[]; the stored
                 # key list makes them self-sufficient — without it a
-                # delta/DV-mode read would build an EMPTY null-safe
+                # delta-mode read would build an EMPTY null-safe
                 # join condition and throw at parse time (or worse,
                 # window over zero key columns) the moment the sidecar
                 # holds entries (review finding, round 10)
                 self.keys = list(meta["keys"])
+            if meta.get("delete_vectors"):
+                # delete-vector mode is retired: its deletes live only
+                # in the __dv sidecar no reader consults any more, so
+                # opening such a table would show every deleted row
+                # again — refuse instead of serving resurrected rows
+                raise ValueError(
+                    f"{self.path} was written in the retired "
+                    "delete-vector mode (\"delete_vectors\": true in "
+                    "_meta.json); its __dv sidecar deletes are not "
+                    "applied by this engine — rebuild the table from "
+                    "its CDC files with tombstones or delta_upserts")
             self.num_buckets = int(meta["num_buckets"])
             self.tombstones = bool(meta.get("tombstones", False))
             self.versioned = bool(meta.get("versioned", False))
-            self.delete_vectors = bool(meta.get("delete_vectors", False))
             self.delta_upserts = bool(meta.get("delta_upserts", False))
             self.delta_seq = int(meta.get("delta_seq", 0))
             self.delta_folded_seq = int(meta.get("delta_folded_seq", 0))
@@ -450,32 +447,24 @@ class KeyedTable:
             self.bloom_columns = list(meta.get("bloom_columns", []))
             self.stats_columns = list(meta.get("stats_columns", []))
             self.known_clones = list(meta.get("known_clones", []))
-        if self.delete_vectors and (self.tombstones or self.versioned):
+        if self.delta_upserts and self.tombstones:
+            # FINAL contract, not a TODO (round 11): the combination
+            # stays walled.  DELETE rows ride the same log, and
+            # tombstones would be a DIFFERENT out-of-order contract the
+            # log already subsumes — out-of-order users of delta mode
+            # get the gate via versioned delta tables (every append is
+            # version-gated at append time against the then-current
+            # survivor).
             raise ValueError(
-                "delete_vectors replaces tombstones (the sidecar carries "
-                "the delete's version for the same out-of-order gate) and "
-                "is not supported on versioned tables — use delta_upserts "
-                "there (merge-on-read for upserts AND deletes, composes "
-                "with versioning)")
-        if self.delta_upserts and (self.tombstones or self.delete_vectors):
-            # FINAL contract, not a TODO (round 11): the combinations
-            # stay walled.  delta_upserts subsumes delete_vectors
-            # (DELETE rows ride the same log), and tombstones would be
-            # a DIFFERENT out-of-order contract the log already
-            # subsumes — out-of-order users of delta mode get the gate
-            # via versioned delta tables (every append is version-gated
-            # at append time against the then-current survivor).
-            raise ValueError(
-                "delta_upserts subsumes delete_vectors (DELETE rows ride "
-                "the same log) and keeps plain-mode delete semantics "
-                "(tombstones would be a different out-of-order contract "
-                "— for out-of-order CDC on a delta table, use "
+                "delta_upserts keeps plain-mode delete semantics (DELETE "
+                "rows ride the same log; tombstones would be a different "
+                "out-of-order contract — for out-of-order CDC on a "
+                "delta table, use "
                 "KeyedTable(versioned=True, delta_upserts=True): the "
                 "log's append gate IS the version gate)")
         # SIBLING dataset like the bloom sidecars: an in-dir child would
         # be swept into the table's own scans, and an underscore-prefixed
         # root is unreadable by Spark's file index
-        self._dv_path = f"{path}__dv"
         self._delta_path = f"{path}__delta"
 
     @staticmethod
@@ -601,7 +590,6 @@ class KeyedTable:
         self._write_sidecar("_meta.json", json.dumps(
             {"num_buckets": self.num_buckets, "keys": self.keys,
              "tombstones": self.tombstones, "versioned": self.versioned,
-             "delete_vectors": self.delete_vectors,
              "delta_upserts": self.delta_upserts,
              "delta_seq": self.delta_seq,
              "delta_folded_seq": self.delta_folded_seq,
@@ -1134,7 +1122,6 @@ class KeyedTable:
         if self.tombstones and TOMBSTONE_COL not in df.columns:
             df = df.withColumn(TOMBSTONE_COL, F.lit(False))
         self._drop_bloom_artifacts()
-        self._write_dv(None)         # init is the reset point of history
         self._drop_delta()
         self._bump_table_version()   # voids any bloom sidecar (fail-open)
         # AFTER the bump (which merges the old meta's registrations):
@@ -1246,115 +1233,6 @@ class KeyedTable:
                 raise
             return self.spark.createDataFrame([], schema)
 
-    # -- delete-vector sidecar (merge-on-read deletes) ---------------------
-    def _read_dv(self) -> DataFrame | None:
-        """The delete-vector entries (keys + DV_VERSION_COL), or None
-        when the sidecar is absent.  Read whole and broadcast at every
-        use site: entries are bounded by keys deleted-but-not-yet-folded
-        (micro-batch-accumulated, reclaimed by fold_delete_vectors), and
-        a global read keeps the sidecar's bucket partitioning advisory —
-        a rebucket can change key->bucket mapping without ever making a
-        stale-partitioned entry invisible.
-
-        Falls back to the ``__dv__old`` backup when the primary is
-        absent: _write_dv's swap renames the previous sidecar aside
-        before renaming the new one in, so the only states are
-        (primary), (primary+backup: crash before backup cleanup —
-        primary wins) and (backup only: crash between the two renames —
-        the backup IS the committed previous state).  A missing sidecar
-        reading as "no deletes" would silently resurrect every deleted
-        row (advice finding, round 7)."""
-        # schema memo: the sidecar layout (keys + DV_VERSION_COL) is
-        # fixed between writes and every write goes through _write_dv,
-        # which refreshes the memo from the content it writes — so a
-        # warm handle reads entries without a footer-inference job per
-        # merge (round 13, guide §1/§6)
-        cached = getattr(self, "_dv_schema", None)
-        for p in (self._dv_path, f"{self._dv_path}__old"):
-            try:
-                if cached is not None:
-                    return self.spark.read.schema(cached).parquet(p)
-                df = self.spark.read.parquet(p)
-                self._dv_schema = df.schema
-                return df
-            except AnalysisException as exc:
-                if exc.getErrorClass() in ("PATH_NOT_FOUND",
-                                           "UNABLE_TO_INFER_SCHEMA"):
-                    continue
-                raise
-        return None
-
-    def _anti_dv(self, df: DataFrame) -> DataFrame:
-        """``df`` minus rows whose key has a delete-vector entry
-        (null-safe on every key column, matching the merge's <=> joins)."""
-        dv = self._read_dv()
-        if dv is None:
-            return df
-        d = F.broadcast(dv.select(*self.keys).alias("__dv"))
-        s = df.alias("__t")
-        cond = F.expr(_key_cond_sql(self.keys, "__t", "__dv"))
-        return s.join(d, cond, "left_anti")
-
-    def _write_dv(self, dv: DataFrame | None) -> None:
-        """Replace the sidecar with ``dv`` (None/empty -> remove it) via
-        write-then-SWAP (the ``rewrite`` convention): a plain overwrite
-        clears the destination before the job commits, so a crash
-        mid-write would silently destroy every accumulated entry — and
-        a lost sidecar reads as "no deletes", resurrecting every
-        deleted row (review finding, round 7).  The new content is
-        pinned with an eager localCheckpoint first — it is derived from
-        the old sidecar's files, and the swap deletes them.
-
-        The swap itself renames the OLD sidecar aside (``__dv__old``)
-        before renaming the new one in, deleting the backup only after
-        the rename commits — a delete-then-rename swap still had a
-        crash window in which the sidecar is simply GONE (advice
-        finding, round 7).  _read_dv falls back to the backup, so every
-        crash point leaves a readable committed state.  The remove path
-        (None/empty) deletes the backup too: a stale backup surviving a
-        reset would resurrect cleared DELETE entries and hide live
-        rows."""
-        fs, _, jvm = self._fs_and_path(self.path)
-        p = jvm.org.apache.hadoop.fs.Path(self._dv_path)
-        p_bak = jvm.org.apache.hadoop.fs.Path(f"{self._dv_path}__old")
-        # remove paths delete the BACKUP first: the reverse order has a
-        # crash window with only the stale backup left, and _read_dv
-        # would fall back to it — resurrecting cleared DELETE entries
-        if dv is None:
-            self._dv_schema = None
-            if fs.exists(p_bak):
-                fs.delete(p_bak, True)
-            if fs.exists(p):
-                fs.delete(p, True)
-            return
-        pinned = dv.localCheckpoint(eager=True)
-        if pinned.limit(1).isEmpty():
-            self._dv_schema = None
-            if fs.exists(p_bak):
-                fs.delete(p_bak, True)
-            if fs.exists(p):
-                fs.delete(p, True)
-            return
-        # the content being written defines the next reads' schema
-        self._dv_schema = pinned.schema
-        tmp = f"{self._dv_path}__tmp"
-        pinned.coalesce(1).write.mode("overwrite").parquet(tmp)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        if not fs.exists(p) and fs.exists(p_bak):
-            # backup-only recovery state (crash between a prior swap's
-            # two renames): PROMOTE the backup — it is the committed
-            # state — before the normal swap; deleting it as a mere
-            # leftover here would open a no-sidecar-at-all crash window
-            # (review finding, round 8)
-            fs.rename(p_bak, p)
-        if fs.exists(p_bak):      # true leftover (primary exists: it wins)
-            fs.delete(p_bak, True)
-        if fs.exists(p):
-            fs.rename(p, p_bak)   # old state stays readable throughout
-        fs.rename(p_tmp, p)
-        if fs.exists(p_bak):
-            fs.delete(p_bak, True)
-
     # -- delta-log sidecar (merge-on-read UPSERTS, round-10 headline) ------
     def _read_delta(self, buckets: Sequence[int] | None = None,
                     vers: Sequence[int] | None = None,
@@ -1371,11 +1249,11 @@ class KeyedTable:
         probed VALUE's log entry lives in its KEY's bucket, which the
         value-derived candidate set knows nothing about — they read
         whole (debt-bounded, reclaimed by ``fold_deltas``).
-        No backup swap is needed here (contrast ``_read_dv``): batches
-        APPEND — the parquet job commit either lands a batch's files
-        whole or not at all, and never touches prior entries; the only
-        destructive op, the fold's clear, renames the whole log aside
-        first (``_drop_delta``).
+        No backup swap is needed here: batches APPEND — the parquet
+        job commit either lands a batch's files whole or not at all,
+        and never touches prior entries; the only destructive op, the
+        fold's clear, renames the whole log aside first
+        (``_drop_delta``).
 
         VERSIONED tables: ``vers`` (required there — every caller knows
         its window from the manifest) selects the _delta_ver partition
@@ -1565,7 +1443,7 @@ class KeyedTable:
         # RESURRECT the older entry as the key's winner over the
         # just-folded base value — which the next fold would then fold
         # in, silently regressing the newer write (review finding,
-        # round 10; the same crash class _write_dv's swap closes).
+        # round 10).
         # One rename makes the whole log invisible atomically; readers
         # never look at the __dropping name, so a crash mid-delete of
         # the renamed dir is invisible and cleaned on the next drop.
@@ -1594,8 +1472,6 @@ class KeyedTable:
         if self.tombstones and TOMBSTONE_COL in df.columns:
             df = (df.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
                   .drop(TOMBSTONE_COL))
-        if self.delete_vectors:
-            df = self._anti_dv(df)
         if self.delta_upserts:
             # buckets: KEY-scoped callers only (lookup) — see _read_delta;
             # as_of: the caller's version when df is a historic base
@@ -1775,8 +1651,6 @@ class KeyedTable:
         if not self.versioned:
             raise ValueError("restore requires a versioned table "
                              "(KeyedTable(..., versioned=True))")
-        # (delete_vectors cannot reach here: the DV x versioned combo is
-        # rejected at construction)
         target_schema_text = None
         if restore_schema:
             target_schema_text = self._schema_text_as_of(version)
@@ -2487,16 +2361,8 @@ class KeyedTable:
         ``read()`` hides tombstones, so rewriting from ``read()`` would
         physically drop the delete markers AND the marker column,
         silently disarming the out-of-order gate (and erroring the next
-        tombstone-mode merge).
-
-        Delete-vector mode: the DV'd rows are EXCLUDED (a wholesale
-        rewrite is the natural fold point — carrying hidden rows into
-        the new layout buys nothing) while the sidecar ENTRIES are
-        kept, so the out-of-order gate survives the rewrite exactly as
-        tombstone markers do."""
+        tombstone-mode merge)."""
         snap = self._read_raw().drop(self.BUCKET_COL)
-        if self.delete_vectors:
-            snap = self._anti_dv(snap)
         if self.delta_upserts:
             # a full rewrite is the natural fold point for the delta
             # log too: the merged view IS the rewrite base, and
@@ -2818,17 +2684,6 @@ class KeyedTable:
                             continue
                     report["delta_files"] += 1
                     report["delta_bytes"] += int(st.getLen())
-        if self.delete_vectors:
-            # sidecar growth is the fold signal (the DV analogue of
-            # dead_ratio): entries accumulate until fold_delete_vectors
-            report["dv_files"] = 0
-            report["dv_bytes"] = 0
-            fs, p, _ = self._fs_and_path(self._dv_path)
-            if fs.exists(p):
-                for st in fs.listStatus(p):
-                    if st.getPath().getName().endswith(".parquet"):
-                        report["dv_files"] += 1
-                        report["dv_bytes"] += int(st.getLen())
         # secondary-index columns from the CURRENT meta, not this
         # handle's copy — an index registered by another process after
         # construction must still be reported (the same cross-process
@@ -2840,7 +2695,7 @@ class KeyedTable:
         if bloom_cols or stats_cols:
             # secondary-index footprint + staleness (the refresh
             # signal): dirty buckets accumulate until the maintenance
-            # cadence pays them down, exactly like dv_bytes/dead_ratio
+            # cadence pays them down, exactly like delta_bytes/dead_ratio
             import json as _json
 
             from .. import fsio
@@ -2939,7 +2794,7 @@ class KeyedTable:
         / Iceberg rewrite_data_files), grouping-only by construction:
 
         * **Content-preserving.**  Files are read raw (tombstone marker
-          rows, delete-vector-hidden rows, every physical row travels
+          rows, every physical row travels
           as-is) and rows keep their file/row order — only the grouping
           into files changes.  The visible snapshot is bit-identical;
           on a versioned table EVERY ``as_of`` snapshot is, since live
@@ -3189,16 +3044,6 @@ class KeyedTable:
             aggs = [F.collect_set(self.BUCKET_COL).alias("buckets"),
                     del_flag.alias("has_del"),
                     F.count(F.lit(1)).alias("n_rows")]
-            if self.delete_vectors and op_col in staging.columns:
-                # DV mode: the delete/upsert legs each need THEIR rows'
-                # bucket sets — ride the same one aggregation instead of
-                # two later distinct+collect jobs (round 13; the shared
-                # _is_delete_sql keeps the split identical to the legs')
-                isd = F.expr(_is_delete_sql(op_col, delete_values))
-                aggs.append(F.collect_set(
-                    F.when(isd, F.col(self.BUCKET_COL))).alias("dv_del_b"))
-                aggs.append(F.collect_set(
-                    F.when(~isd, F.col(self.BUCKET_COL))).alias("dv_up_b"))
             if dedup:
                 # Distinct over a STRUCT of the keys, not the bare columns:
                 # count_distinct(*cols) skips rows where any key is NULL
@@ -3226,27 +3071,6 @@ class KeyedTable:
                 self._merge_delta(stg, merge_kwargs, buckets,
                                   has_del=bool(agg_row["has_del"]))
                 return 0, n_rows, did_dedup
-            if self.delete_vectors:
-                # bucket-set hints from the fused agg — valid only when
-                # the batch was NOT deduplicated (dedup can flip a key's
-                # surviving row between the delete and upsert legs, so
-                # the pre-dedup sets would over-read; the legs then fall
-                # back to their own exact computation)
-                dv_del_b = dv_up_b = None
-                if not did_dedup:
-                    if "dv_del_b" in agg_row.asDict():
-                        dv_del_b = sorted(int(b)
-                                          for b in agg_row["dv_del_b"])
-                        dv_up_b = sorted(int(b) for b in agg_row["dv_up_b"])
-                    else:
-                        # no op column: every row is an upsert
-                        dv_del_b = []
-                        dv_up_b = sorted(int(b) for b in buckets)
-                n_b = self._merge_dv(stg, merge_kwargs,
-                                     has_del=bool(agg_row["has_del"]),
-                                     del_buckets=dv_del_b,
-                                     up_buckets_pregate=dv_up_b)
-                return n_b, n_rows, did_dedup
             # delete-free batches (the common CDC case) skip the
             # emptied-bucket bookkeeping below — one less job + no cache.
             # Tombstone mode NEVER empties a bucket (deletes become marker
@@ -3260,201 +3084,6 @@ class KeyedTable:
         finally:
             stamped.unpersist()
             _aqe_restore(self.spark)
-
-    def _merge_dv(self, stg: DataFrame, merge_kwargs: dict,
-                  has_del: bool = True,
-                  del_buckets: Sequence[int] | None = None,
-                  up_buckets_pregate: Sequence[int] | None = None) -> int:
-        """Merge-on-read delete path (``delete_vectors=True``): the
-        batch's DELETE rows never rewrite a bucket — they append
-        (keys, version) entries to the ``__dv`` sidecar that readers
-        anti-join out — while UPSERT rows ride the ordinary
-        touched-bucket merge.  The out-of-order contract is the
-        tombstone contract, relocated to the sidecar:
-
-        * a stale delete (older than the stored row's version) is gated
-          by a column-pruned READ of the touched buckets — read-only,
-          still no rewrite;
-        * a stale upsert for a deleted key is gated against the DV
-          entry's version (the sidecar carries the delete's version
-          exactly as a tombstone row would);
-        * a FRESH upsert revives the key: the entry is removed and the
-          row merges normally (invariant: while an entry exists, the
-          stored row's version <= the entry's version, so the DV gate
-          subsumes the row gate for those keys).
-
-        Returns #buckets rewritten (0 for a delete-only batch — the
-        point of the mode).  Crash contract: the sidecar commits before
-        the bucket merge, so a crash between the two leaves the normal
-        partial-batch state (deletes applied, upserts pending) and the
-        ledger replay converges — both legs are idempotent."""
-        from .ordering import OP_COL
-        if merge_kwargs.get("insert_deletes"):
-            # CdcPipeline rejects this combo at construction; direct
-            # operator callers must hit the same wall — _merge_dv
-            # diverts every delete row to the sidecar BEFORE merge_cdc
-            # could insert unmatched deletes as live rows, so the flag
-            # would be silently inert (advice finding, round 7; the
-            # repo convention is to reject silently-inert flag combos).
-            raise ValueError(
-                "insert_deletes=True is incompatible with "
-                "delete_vectors mode: DV diverts delete rows to the "
-                "sidecar, so unmatched deletes can never land as live "
-                "rows")
-        op_col = merge_kwargs.get("op_col", OP_COL)
-        delete_values = list(merge_kwargs.get(
-            "delete_values", DEFAULT_DELETE_VALUES))
-        version_col = merge_kwargs.get("version_col")
-        # merge_cdc's gate contract verbatim: versions compare only when
-        # the column exists on BOTH sides — staging AND the stored table
-        # (a version the table doesn't carry can't gate anything there,
-        # so the sidecar must not gate either, or DV mode would diverge
-        # from the tombstone contract it mirrors)
-        schema = self._load_schema()
-        t_cols = set(schema.names) if schema is not None else set()
-        vc = (version_col if version_col is not None
-              and version_col in stg.columns
-              and version_col in t_cols else None)
-        if has_del and op_col in stg.columns:
-            is_del = F.expr(_is_delete_sql(op_col, delete_values))
-            dels = stg.where(is_del)
-            ups = stg.where(~is_del)
-        else:
-            # delete-free batch (the common CDC case): the fused agg
-            # already proved there is nothing for the sidecar legs to do
-            dels = None
-            ups = stg
-        dv = self._read_dv()
-        kcond = lambda a, b: F.expr(  # noqa: E731
-            _key_cond_sql(self.keys, a, b))
-
-        def take_new(new_v, old_v):
-            # merge_cdc's NULL contract verbatim: NULL sorts before any
-            # version; ties -> the new write wins
-            return F.coalesce((new_v >= old_v) | old_v.isNull(),
-                              F.lit(False))
-
-        # -- upsert leg: gate vs DV entries, revive what survives ---------
-        # the fused agg's pre-gate upsert bucket set proves emptiness up
-        # front: a delete-only batch (the mode's common case) skips the
-        # gate join, revive probe and checkpoint entirely — gating only
-        # ever REMOVES rows, so pre-gate empty ⇒ post-gate empty
-        ups_empty = up_buckets_pregate is not None and not up_buckets_pregate
-        revived = None
-        if dv is not None and not ups_empty:
-            d = F.broadcast(dv.withColumn("__dv_present", F.lit(True))
-                            .alias("__dv"))
-            j = ups.alias("__u").join(d, kcond("__u", "__dv"), "left_outer")
-            present = F.col("__dv_present").isNotNull()
-            if vc:
-                keep = (~present) | take_new(
-                    F.expr(f"__u.{_q(vc)}"),
-                    F.expr(f"__dv.{_q(self.DV_VERSION_COL)}"))
-            else:
-                keep = F.lit(True)          # no versioning: last write wins
-            kept = j.where(keep)
-            ups = kept.select("__u.*")
-            revived = (kept.where(present)
-                       .selectExpr(*[f"__u.{_q(k)} AS {_q(k)}"
-                                     for k in self.keys]).distinct())
-            # the revive probe below decides whether the sidecar must be
-            # rewritten at all; it is micro-batch-sized (broadcast join)
-            if revived is not None and revived.limit(1).isEmpty():
-                revived = None
-        if dv is not None and not ups_empty and \
-                (has_del or revived is not None):
-            # pin the upsert leg BEFORE the sidecar overwrite below
-            # deletes the files its plan reads (micro-batch-sized)
-            ups = ups.localCheckpoint(eager=True)
-
-        # -- delete leg: gate vs stored row versions (read-only) ----------
-        if dels is not None and vc:
-            if del_buckets is None:
-                # no fused-agg hint (deduped batch): map-only collect of
-                # the delete rows' bucket stamps — batch-bounded, and no
-                # distinct exchange (the driver set dedups)
-                del_buckets = sorted({int(r[0]) for r in
-                                      dels.select(self.BUCKET_COL)
-                                      .collect()})
-            if del_buckets:
-                stored = (self._read_raw(buckets=del_buckets)
-                          .select(*self.keys, F.col(vc).alias("__t_v")))
-                # bound every broadcast by the micro-batch (same shape as
-                # merge_cdc's insert path): stored rows for the staged
-                # keys first (<= |dels|), then gate dels against them
-                sv = stored.alias("__t").join(
-                    F.broadcast(dels.select(*self.keys).alias("__d")),
-                    kcond("__t", "__d"), "left_semi")
-                jd = (dels.alias("__d2").join(
-                    F.broadcast(sv.withColumn("__t_present", F.lit(True))
-                                .alias("__t2")),
-                    kcond("__d2", "__t2"), "left_outer"))
-                dels = (jd.where(F.col("__t_present").isNull()
-                                 | take_new(F.expr(f"__d2.{_q(vc)}"),
-                                            F.col("__t_v")))
-                        .select("__d2.*"))
-        # entry version: on a re-delete the WINNER's version survives
-        entries = None
-        if dels is not None:
-            if vc:
-                ver_type = schema[vc].dataType.simpleString()
-                new_ver = F.col(vc).cast(ver_type)
-            else:
-                new_ver = F.lit(None).cast("string")
-            entries = dels.select(*self.keys,
-                                  new_ver.alias(self.DV_VERSION_COL))
-        if entries is not None and dv is not None and vc:
-            e = entries.alias("__e").join(
-                F.broadcast(dv.withColumn("__dv_present", F.lit(True))
-                            .alias("__dv2")),
-                kcond("__e", "__dv2"), "left_outer")
-            win = F.when(
-                F.col("__dv_present").isNotNull()
-                & ~take_new(F.expr(f"__e.{_q(self.DV_VERSION_COL)}"),
-                            F.expr(f"__dv2.{_q(self.DV_VERSION_COL)}")),
-                F.expr(f"__dv2.{_q(self.DV_VERSION_COL)}")
-            ).otherwise(F.expr(f"__e.{_q(self.DV_VERSION_COL)}"))
-            entries = e.select(
-                *[F.expr(f"__e.{_q(k)}").alias(k) for k in self.keys],
-                win.alias(self.DV_VERSION_COL))
-
-        # -- commit: sidecar first, then the ordinary upsert merge --------
-        if entries is not None or revived is not None:
-            if dv is None:
-                new_dv = entries
-            else:
-                gone = (entries.select(*self.keys) if entries is not None
-                        else self.spark.createDataFrame(
-                            [], dv.select(*self.keys).schema))
-                if revived is not None:
-                    gone = gone.unionByName(revived)
-                old_kept = dv.alias("__o").join(
-                    F.broadcast(gone.alias("__g")), kcond("__o", "__g"),
-                    "left_anti")
-                new_dv = (old_kept.unionByName(entries)
-                          if entries is not None else old_kept)
-            self._write_dv(new_dv)
-
-        if ups_empty:
-            up_buckets: list[int] = []
-        elif dv is None and up_buckets_pregate is not None:
-            # no sidecar ⇒ the upsert leg was never gated: the fused
-            # agg's pre-gate set is exact, zero extra jobs
-            up_buckets = list(up_buckets_pregate)
-        else:
-            # post-gate set: map-only collect of the (checkpointed)
-            # upsert rows' bucket stamps — batch-bounded, no distinct
-            # exchange (the driver set dedups)
-            up_buckets = sorted({int(r[0]) for r in
-                                 ups.select(self.BUCKET_COL).collect()})
-        if not up_buckets:
-            return 0
-        current = self._read_raw(buckets=up_buckets).drop(self.BUCKET_COL)
-        merged = merge_cdc(current, ups.drop(self.BUCKET_COL), self.keys,
-                           **merge_kwargs)
-        out = self._with_bucket(merged)
-        self._commit_merge(out, up_buckets, has_deletes=False)
-        return len(up_buckets)
 
     def _merge_delta(self, stg: DataFrame, merge_kwargs: dict,
                      buckets: Sequence[int], has_del: bool) -> int:
@@ -3779,12 +3408,11 @@ class KeyedTable:
             "left_anti")
         live = (win.where(~F.col(self.DELTA_DEL_COL))
                 .select(*[F.col(c) for c in raw.columns]))
-        # pin before the self-overwrite (the fold_delete_vectors rule):
-        # the kept-bucket collect below materializes the lazy
-        # checkpoint, so every base row is read and pinned BEFORE the
-        # dynamic overwrite deletes the files it came from (Spark
-        # completes a lazily-checkpointed RDD's missing partitions when
-        # the first job over it finishes)
+        # pin before the self-overwrite: the kept-bucket collect below
+        # materializes the lazy checkpoint, so every base row is read
+        # and pinned BEFORE the dynamic overwrite deletes the files it
+        # came from (Spark completes a lazily-checkpointed RDD's missing
+        # partitions when the first job over it finishes)
         out = base_kept.unionByName(live).localCheckpoint(eager=False)
         kept_b = {int(r[0]) for r in
                   out.select(self.BUCKET_COL).distinct().collect()}
@@ -3818,76 +3446,10 @@ class KeyedTable:
             self.delta_folded_seq = self.delta_seq
             self._save_meta()      # persist the folded-seq watermark
             return len(buckets)
-        (out.repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
-        emptied = [b for b in buckets if b not in kept_b]
-        if emptied:
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            for b in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/{self.BUCKET_COL}={b}")
-                fs = p.getFileSystem(hconf)
-                if fs.exists(p):
-                    fs.delete(p, True)
+        self._overwrite_buckets(out, buckets, kept_b)
         self._drop_delta()
         self._sync_stored_meta()
         self._save_meta()          # persist the folded-seq watermark
-        return len(buckets)
-
-    def fold_delete_vectors(self, before_version=None) -> int:
-        """Maintenance: physically apply delete-vector entries — all of
-        them, or (with ``before_version``) only entries older than it,
-        keeping recent ones to gate still-plausible late arrivals (the
-        exact ``purge_tombstones`` contract, including NULL versions
-        sorting before every cutoff).  Rewrites ONLY the buckets the
-        folded keys hash into (dynamic overwrite; cost ∝ folded keys'
-        buckets, never table-sized) and drops the folded entries.
-        Returns #buckets rewritten."""
-        if not self.delete_vectors:
-            raise ValueError("fold_delete_vectors requires "
-                             "KeyedTable(delete_vectors=True)")
-        dv = self._read_dv()
-        if dv is None:
-            return 0
-        vcol = F.col(self.DV_VERSION_COL)
-        foldc = (F.lit(True) if before_version is None
-                 else vcol.isNull() | (vcol < F.lit(before_version)))
-        fold = dv.where(foldc).localCheckpoint(eager=True)
-        if fold.limit(1).isEmpty():
-            return 0
-        keep = dv.where(~foldc)
-        buckets = sorted(int(r[0]) for r in
-                         self._with_bucket(fold).select(self.BUCKET_COL)
-                         .distinct().collect())
-        raw = self._read_raw(buckets=buckets).alias("__t")
-        cond = F.expr(_key_cond_sql(self.keys, "__t", "__f"))
-        kept_rows = raw.join(
-            F.broadcast(fold.select(*self.keys).alias("__f")), cond,
-            "left_anti").localCheckpoint(eager=True)   # self-overwrite pin
-        kept_b = {int(r[0]) for r in
-                  kept_rows.select(self.BUCKET_COL).distinct().collect()}
-        # flag BEFORE the rewrite commits (see _mark_index_dirty)
-        self._mark_index_dirty(buckets)
-        (kept_rows.repartition(self.BUCKET_COL)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(self.BUCKET_COL)
-         .parquet(self.path))
-        emptied = [b for b in buckets if b not in kept_b]
-        if emptied:
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            for b in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/{self.BUCKET_COL}={b}")
-                fs = p.getFileSystem(hconf)
-                if fs.exists(p):
-                    fs.delete(p, True)
-        self._write_dv(keep)
         return len(buckets)
 
     def _commit_merge(self, out: DataFrame, buckets: Sequence[int],
@@ -3934,30 +3496,33 @@ class KeyedTable:
                     "num_buckets": self.num_buckets})
                 self._save_manifest(entries)
                 return
-            # dynamic partition overwrite: only the buckets present in
-            # `out` (== the touched buckets) are replaced on disk.
-            # Set per-write, NOT via session conf — under a session with
-            # the default STATIC mode this write would silently wipe
-            # every untouched bucket.
-            (out.repartition(self.BUCKET_COL)
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy(self.BUCKET_COL)
-             .parquet(self.path))
-            if has_deletes:
-                # A bucket whose every row was deleted is absent from
-                # `out`, so dynamic overwrite leaves its old files —
-                # drop it here.
-                emptied = [b for b in buckets if b not in kept]
-                if emptied:
-                    jvm = self.spark._jvm
-                    hconf = self.spark._jsc.hadoopConfiguration()
-                    for b in emptied:
-                        p = jvm.org.apache.hadoop.fs.Path(
-                            f"{self.path}/{self.BUCKET_COL}={b}")
-                        fs = p.getFileSystem(hconf)
-                        if fs.exists(p):
-                            fs.delete(p, True)
+            self._overwrite_buckets(out, buckets, kept)
         finally:
             if has_deletes:
                 out.unpersist()
+
+    def _overwrite_buckets(self, out: DataFrame, buckets: Sequence[int],
+                           kept: set[int]) -> None:
+        """The unversioned commit of touched-bucket content shared by
+        merges and delta folds: dynamic partition overwrite replaces
+        only the buckets present in ``out``, then every touched bucket
+        not in ``kept`` (all its rows deleted, so absent from ``out``,
+        whose old files dynamic overwrite leaves behind) is deleted.
+        The mode is set per-write, NOT via session conf — under a
+        session with the default STATIC mode this write would silently
+        wipe every untouched bucket."""
+        (out.repartition(self.BUCKET_COL)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(self.BUCKET_COL)
+         .parquet(self.path))
+        emptied = [b for b in buckets if b not in kept]
+        if emptied:
+            jvm = self.spark._jvm
+            hconf = self.spark._jsc.hadoopConfiguration()
+            for b in emptied:
+                p = jvm.org.apache.hadoop.fs.Path(
+                    f"{self.path}/{self.BUCKET_COL}={b}")
+                fs = p.getFileSystem(hconf)
+                if fs.exists(p):
+                    fs.delete(p, True)

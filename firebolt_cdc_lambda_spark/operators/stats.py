@@ -369,8 +369,8 @@ class StatsIndex(SidecarIndex):
             # else re-raises: a bare `except: return None` would turn
             # any persistent fault (corrupted footer, permissions) into
             # a PERMANENT silent full scan with no signal — the same
-            # whitelist contract as _read_raw / _read_dv (advice
-            # finding, round 8).
+            # whitelist contract as _read_raw (advice finding,
+            # round 8).
             if exc.getErrorClass() in ("PATH_NOT_FOUND",
                                        "UNABLE_TO_INFER_SCHEMA"):
                 return None

@@ -63,7 +63,6 @@ class CdcPipeline:
                  version_col: str | None = None,
                  tombstones: bool | None = None,
                  versioned: bool = False,
-                 delete_vectors: bool = False,
                  delta_upserts: bool = False,
                  alert_hook=None,
                  expectations=None):
@@ -102,40 +101,25 @@ class CdcPipeline:
         # always wins over the constructor.  Purge accumulated markers
         # via purge_tombstones / CdcFleet.run_maintenance on the same
         # cadence as ledger GC.
-        if insert_deletes and delete_vectors:
-            # _merge_dv diverts every delete row to the sidecar BEFORE
-            # merge_cdc could insert unmatched deletes as live rows, so
-            # the combination would silently break insert_deletes'
-            # reference-parity semantics — reject loudly (the repo
-            # convention for silently-inert flag combos)
-            raise ValueError("insert_deletes and delete_vectors are "
-                             "mutually exclusive: DV mode records "
-                             "deletes in the sidecar, so unmatched "
-                             "deletes can never land as live rows")
         if insert_deletes and delta_upserts:
-            # same wall as DV mode: the delta log applies deletes at
-            # read, so unmatched deletes can never land as live rows
+            # the delta log applies deletes at read, so unmatched
+            # deletes can never land as live rows
             raise ValueError("insert_deletes and delta_upserts are "
                              "mutually exclusive: the delta log applies "
                              "deletes at read time")
         if tombstones is None:
-            # delete_vectors carries the same out-of-order protection in
-            # the sidecar, so the marker-row default yields to it.
             # delta_upserts keeps PLAIN-mode delete semantics by
-            # contract (KeyedTable rejects the tombstone combo): while a
-            # delete sits in the log its version still gates, and after
-            # fold_deltas the documented plain-mode resurrection gap
-            # applies — operators choosing delta mode trade that for
-            # zero write amplification.
-            tombstones = (not insert_deletes and not delete_vectors
-                          and not delta_upserts)
+            # contract (KeyedTable rejects the tombstone combo): each
+            # append is version-gated against the key's then-current
+            # survivor, and a winning delete leaves the key ABSENT — so
+            # a later stale upsert for it re-inserts, whether the delete
+            # still sits in the log or was folded (the documented
+            # plain-mode resurrection gap, pinned by
+            # test_delta.py::test_version_gate_matches_eager).
+            # Operators choosing delta mode trade that for zero write
+            # amplification.
+            tombstones = not insert_deletes and not delta_upserts
         self.tombstones = tombstones
-        # delete_vectors=True: merge-on-read deletes (KeyedTable DV
-        # mode) — a delete-only CDC file appends (keys, version) sidecar
-        # entries instead of rewriting buckets; readers anti-join them
-        # out.  Fold accumulated entries via fold_delete_vectors on the
-        # maintenance cadence.  Existing tables: stored meta wins.
-        self.delete_vectors = delete_vectors
         # delta_upserts=True: merge-on-read UPSERTS (KeyedTable delta
         # mode) — every CDC batch appends to the __delta log sidecar
         # and rewrites ZERO base buckets; readers resolve keys from the
@@ -168,7 +152,6 @@ class CdcPipeline:
                           num_buckets=self.num_buckets,
                           tombstones=self.tombstones,
                           versioned=self.versioned,
-                          delete_vectors=self.delete_vectors,
                           delta_upserts=self.delta_upserts)
 
     # -- continuous aggregates maintained per batch -----------------------
@@ -438,41 +421,20 @@ class CdcPipeline:
         pushed-down marker-column scan, so a clean fleet sweep costs
         metadata + one pruned scan per table, never a rewrite).  Run
         on the maintenance cadence, alongside ledger GC and rebucket."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return False
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.tombstones:
+        target = self._resolve_target(table)
+        if target is None or not target.tombstones:
             return False
         return target.purge_tombstones(before_version=before_version,
                                        version_col=self.version_col)
 
-    def fold_delete_vectors(self, table: str, before_version=None) -> int:
-        """Physically apply ``table``'s delete-vector entries — all, or
-        only those older than ``before_version``, keeping recent ones to
-        gate still-plausible late arrivals (the DV analogue of
-        purge_tombstones, same cadence).  Returns #buckets rewritten
-        (0: table unconfigured / absent / not DV-mode / nothing to
-        fold)."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.delete_vectors:
-            return 0
-        return target.fold_delete_vectors(before_version=before_version)
-
     def fold_deltas(self, table: str) -> int:
         """Physically apply ``table``'s delta log into its base buckets
         and clear the sidecar (the delta-mode analogue of
-        fold_delete_vectors, same cadence slot).  Returns #buckets
+        purge_tombstones, same cadence slot).  Returns #buckets
         rewritten (0: table unconfigured / absent / not delta-mode /
         empty log)."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.delta_upserts:
+        target = self._resolve_target(table)
+        if target is None or not target.delta_upserts:
             return 0
         return target.fold_deltas()
 
@@ -514,11 +476,8 @@ class CdcPipeline:
         the batch-order gate drops same-event-time corrected rows),
         pinned end-to-end in
         tests/test_pipeline.py::test_scd2_incident_loop_reconstructs_history."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table)
+        if target is None or not target.versioned:
             return None
         new_v = target.restore(version, materialize=materialize,
                                restore_schema=restore_schema)
@@ -541,11 +500,8 @@ class CdcPipeline:
         operator drives directly (or through a second pipeline rooted
         elsewhere).  Source maintenance hazard + the materialize
         escape are documented on KeyedTable.clone."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table)
+        if target is None or not target.versioned:
             return None
         return target.clone(dest_path, as_of=as_of,
                             materialize=materialize)
@@ -570,11 +526,8 @@ class CdcPipeline:
         append produced (a file-count gate would cross after a single
         ~30-key batch — review finding, round 10).  0: unconfigured /
         absent / not delta-mode / nothing unfolded."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return 0
-        target = self.target_for(table, keys)
-        if not target.delta_upserts or not target.exists():
+        target = self._resolve_target(table)
+        if target is None or not target.delta_upserts:
             return 0
         return max(0, target.delta_seq - target.delta_folded_seq)
 
@@ -635,11 +588,8 @@ class CdcPipeline:
         REFUSES (raises) — under the fleet sweep's per-table try, that
         skips this table's GC for the sweep and records the failure,
         never strands the fork silently."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return False
-        target = self.target_for(table, keys)
-        if not target.exists() or not target.versioned:
+        target = self._resolve_target(table)
+        if target is None or not target.versioned:
             return False
         target.purge_versions(keep_last=keep_last,
                               check_clones=check_clones)
@@ -655,11 +605,8 @@ class CdcPipeline:
         ``compactable_files`` (the packable-run count) exactly as
         dead_ratio gates version GC.  None: table unconfigured or
         absent."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists():
+        target = self._resolve_target(table)
+        if target is None:
             return None
         return target.compact(target_bytes=target_bytes,
                               small_bytes=small_bytes)
@@ -696,11 +643,8 @@ class CdcPipeline:
         Pass the compact cadence's ``compact_target_bytes`` so the
         ``compactable_files`` count splits runs exactly as that
         compact() will.  None: table unconfigured or absent."""
-        keys = self.table_keys.resolve(table)
-        if keys is None:
-            return None
-        target = self.target_for(table, keys)
-        if not target.exists():
+        target = self._resolve_target(table)
+        if target is None:
             return None
         return target.health_report(
             small_file_bytes=small_file_bytes,

@@ -124,7 +124,7 @@ def register_snapshot_view(spark: SparkSession, table, name: str,
     instead of nulled-in current columns.
 
     ``as_of=None`` registers the LIVE snapshot (tombstones hidden,
-    delete vectors applied, delta-log overlay resolved).  A versioned
+    delta-log overlay resolved).  A versioned
     table's historical CONTENT is immutable by construction (epoch
     dirs are append-only and the delta window is manifest-pinned), but
     the FILES a view pinned at registration are not: purge_versions

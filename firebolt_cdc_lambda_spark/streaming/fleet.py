@@ -241,9 +241,9 @@ class CdcFleet:
         listing, no Spark job, and one increment per batch regardless
         of how many bucket files the append produced) reaches
         ``fold_delta_batches`` (default 8; None disables).  Unlike the
-        DV fold there is no version cutoff: the whole log folds, and
-        post-fold gating continues against the base rows' stored
-        versions.  One table failing must not abort the sweep (same
+        tombstone purge there is no version cutoff: the whole log
+        folds, and post-fold gating continues against the base rows'
+        stored versions.  One table failing must not abort the sweep (same
         degrade-don't-die posture as run_once)."""
         if purge_dead_ratio is not None and keep_versions is None:
             # the gate modifies the keep_versions GC; alone it would be
@@ -262,11 +262,6 @@ class CdcFleet:
             try:
                 did = self.pipeline.purge_tombstones(
                     table, before_version=before_version)
-                # DV-mode tables: fold sidecar entries on the same
-                # cadence and version cutoff (the tombstone-purge
-                # analogue; 0 for non-DV tables, no probe cost)
-                did = bool(self.pipeline.fold_delete_vectors(
-                    table, before_version=before_version)) or did
                 if fold_delta_batches is not None and \
                         self.pipeline.delta_backlog(table) \
                         >= fold_delta_batches:

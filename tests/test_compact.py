@@ -164,22 +164,6 @@ def test_tombstone_markers_survive(spark, tmp_path):
     assert 3 not in {r[0] for r in _snapshot(kt)}
 
 
-def test_delete_vector_rows_stay_physical_and_hidden(spark, tmp_path):
-    kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=2,
-                    delete_vectors=True)
-    kt.init(_rows(spark, range(100)))
-    kt.cluster_by(["ts"], max_records_per_file=10)
-    kt.merge_batch(spark.createDataFrame(
-        [Row(id=i, ts=0, payload="x", Op="D",
-             load_timestamp=dt.datetime(2024, 1, 2)) for i in (4, 9)]))
-    vis_before = _snapshot(kt)
-    assert all(i not in {r[0] for r in vis_before} for i in (4, 9))
-    raw_before = kt._read_raw().count()              # DV'd rows physical
-    assert kt.compact(target_bytes=1 << 20, small_bytes=1 << 19)["groups"]
-    assert kt._read_raw().count() == raw_before      # still physical
-    assert _snapshot(kt) == vis_before               # still hidden
-
-
 def test_versioned_all_snapshots_identical(spark, tmp_path):
     kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=4,
                     versioned=True)

@@ -235,10 +235,9 @@ def test_full_row_contract_and_mode_combos(spark, tmp_path):
     with pytest.raises(ValueError, match="insert_deletes"):
         delta.merge_batch(spark.createDataFrame(
             _mk_rows([1], op="U")), insert_deletes=True)
-    for combo in (dict(tombstones=True), dict(delete_vectors=True)):
-        with pytest.raises(ValueError, match="delta_upserts"):
-            KeyedTable(spark, str(tmp_path / "x"), ["id"],
-                       delta_upserts=True, **combo)
+    with pytest.raises(ValueError, match="delta_upserts"):
+        KeyedTable(spark, str(tmp_path / "x"), ["id"],
+                   delta_upserts=True, tombstones=True)
     with pytest.raises(ValueError, match="initialized"):
         kt = KeyedTable(spark, str(tmp_path / "fresh"), ["id"],
                         delta_upserts=True)

@@ -157,8 +157,7 @@ def test_fleet_maintenance_pooled_equals_serial(spark, tmp_path):
     CONCURRENTLY by default (pool_width auto).  The pooled sweep must
     produce the same status map and the same on-disk table states as
     pool_width=1 (the prior serial behavior), with real mixed debt —
-    tombstones on one table, a delete-vector sidecar on another, and a
-    null-PK bystander."""
+    tombstones on two tables and a null-PK bystander."""
     from pyspark.sql import functions as F
 
     from firebolt_cdc_lambda_spark.operators.merge import TOMBSTONE_COL

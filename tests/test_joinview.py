@@ -523,64 +523,6 @@ def test_property_random_interleaving_composite(spark, tmp_path):
         synced()
 
 
-def test_dv_mode_fact_gates_view_like_the_fact_table(spark, tmp_path):
-    """Round-7 interplay: a DELETE-VECTOR-mode pipeline's view must
-    apply the same out-of-order gate as the fact table — the view
-    inherits DV mode (its own sidecar), and rebuild adopts the FACT's
-    entries (the tombstone-copy analogue), replacing stale view
-    entries that would otherwise hide legitimately-revived rows."""
-    from firebolt_cdc_lambda_spark.config import TableKeys
-    from firebolt_cdc_lambda_spark.pipeline import CdcPipeline
-
-    root = str(tmp_path / "src")
-
-    def write(name, rows):
-        spark.createDataFrame(rows).coalesce(1).write.parquet(
-            f"{root}/fair/orders/2024/01/01/{name}")
-
-    pipe = CdcPipeline(
-        spark, str(tmp_path / "wh"),
-        TableKeys.from_json('{"orders": "id", "custs": "did"}'),
-        num_buckets=4, version_col="load_timestamp", delete_vectors=True)
-    dim = pipe.target_for("custs", ["did"])
-    dim.init(spark.createDataFrame(dim_rows(
-        [(10, "ten", "I"), (20, "twenty", "I")], ts(0))).drop("Op"))
-    fact = pipe.target_for("orders", ["id"])
-    view = JoinView(spark, str(tmp_path / "view"), fact, dim, fk="cust")
-    pipe.register_join_view(view, fact_table="orders")
-
-    write("f0.parquet", fact_rows(
-        [(1, 10, "a", "I"), (2, 20, "b", "I")], ts(0)))
-    write("f2.parquet", fact_rows(
-        [(1, 20, "a2", "U"), (2, 20, "b", "D")], ts(2)))
-    write("f1_late.parquet", fact_rows(
-        [(1, 10, "STALE", "U"), (2, 10, "ZOMBIE", "U")], ts(1)))
-    for f in ("f0.parquet", "f2.parquet", "f1_late.parquet"):
-        pipe.process_file(f"{root}/fair/orders/2024/01/01/{f}")
-    assert view.table.delete_vectors is True     # inherited from the fact
-    assert_synced(view)
-    rows = {r["id"]: (r["val"], r["dim_name"])
-            for r in view.read().collect()}
-    assert rows == {1: ("a2", "twenty")}         # stale gated, zombie gated
-
-    # rebuild adopts the fact's entries: still gated afterwards...
-    view.rebuild()
-    assert_synced(view)
-    write("f1_later.parquet", fact_rows([(2, 10, "ZOMBIE2", "U")], ts(1)))
-    pipe.process_file(f"{root}/fair/orders/2024/01/01/f1_later.parquet")
-    assert_synced(view)
-    assert {r["id"] for r in view.read().collect()} == {1}
-
-    # ...and a REVIVED key survives a rebuild even when the view had a
-    # stale entry for it (the leftover-entry hazard the adopt fixes):
-    # desync the view on purpose by reviving key 2 on the fact ONLY
-    batch = spark.createDataFrame(fact_rows([(2, 30, "back", "U")], ts(5)))
-    fact.merge_batch(batch, version_col="load_timestamp")
-    view.rebuild()
-    assert_synced(view)
-    assert {r["id"] for r in view.read().collect()} == {1, 2}
-
-
 def test_composite_probe_survives_batch_dtype_drift(spark, tmp_path):
     """Review regression: xxhash64 is TYPE-sensitive, so a dim delta
     arriving with narrower integer types than the dim table must still

@@ -65,37 +65,6 @@ def test_full_load_null_pk_skipped(spark, tmp_path):
     assert pipe.bootstrap_from_load_files("nokeys", ["/nope"]).status == "skipped"
 
 
-def test_rollup_under_delete_vector_mode(spark, tmp_path):
-    """Round-7 interplay: in a delete_vectors=True pipeline a delete
-    batch rewrites no base buckets, but the rollup must still see the
-    pre-images (captured from read() BEFORE the merge, while the rows
-    are still visible) and the post-merge read() must hide them — the
-    maintained rollup equals the from-scratch re-aggregation."""
-    pipe = CdcPipeline(spark, str(tmp_path / "wh"),
-                       TableKeys.from_json('{"tx": "id"}'), num_buckets=4,
-                       delete_vectors=True, version_col="load_timestamp")
-    rollup = RollupTable(spark, str(tmp_path / "rollup"), ["status"], aggs,
-                         num_buckets=4)
-    pipe.register_rollup("tx", rollup, project=lambda df: df)
-    b1 = spark.createDataFrame(
-        [Row(id=i, status=("a", "b")[i % 2], amt=float(i), Op="I",
-             load_timestamp=TS) for i in range(20)])
-    pipe.process_batch("tx", ["id"], b1)
-    # delete-only batch: all of status 'b' except id=1
-    b2 = spark.createDataFrame(
-        [Row(id=i, status="b", amt=float(i), Op="D", load_timestamp=TS2)
-         for i in range(3, 20, 2)])
-    res = pipe.process_batch("tx", ["id"], b2)
-    assert res.buckets_rewritten == 0              # DV: no base rewrite
-    snap = pipe.target_for("tx", ["id"]).read()
-    want = {r["status"]: (r["n"], r["total"])
-            for r in snap.groupBy("status").agg(*aggs()).collect()}
-    got = {r["status"]: (r["n"], r["total"])
-           for r in rollup.read().collect()}
-    assert got == want
-    assert got["b"][0] == 1                        # only id=1 left
-
-
 def test_rebootstrap_resyncs_registered_rollup(spark, tmp_path):
     """A full-load RE-bootstrap of an EXISTING table replaces the
     snapshot wholesale; the incremental rollup leg only re-aggregates

@@ -205,21 +205,6 @@ def test_versioned_table_scan_refresh_and_time_travel(spark, tmp_path):
             == _expect(kt, 100, 400))
 
 
-def test_delete_vectors_scan_hides_dv_rows(spark, tmp_path):
-    """DV-mode interplay: scan rides _hide_tombstones, so sidecar
-    deletes are invisible through the pruned path too."""
-    kt = KeyedTable(spark, str(tmp_path / "dv"), ["id"], num_buckets=4,
-                    delete_vectors=True)
-    kt.init(_rows(spark, range(100)).drop("Op", "load_timestamp"))
-    kt.cluster_by(["ts"], max_records_per_file=10)
-    ix = StatsIndex(kt, "ts")
-    ix.build()
-    kt.merge_batch(_rows(spark, [12, 13]).withColumn("Op", F.lit("D")),
-                   version_col="load_timestamp")
-    got = sorted(r["id"] for r in ix.scan(lo=100, hi=200).collect())
-    assert got == [10, 11, 14, 15, 16, 17, 18, 19, 20]
-
-
 def test_pipeline_maintenance_refreshes_stats(spark, tmp_path):
     """CdcPipeline.refresh_stats_indexes (the run_maintenance cadence
     hook) pays the dirty-bucket debt down for zone maps on the same
@@ -272,7 +257,7 @@ def test_randomized_scans_no_false_negatives(spark, tmp_path):
 
 def test_health_report_tracks_index_footprint(spark, tmp_path):
     """health_report surfaces secondary-index bytes + accumulated
-    dirty buckets (the refresh signal, like dv_bytes for folds)."""
+    dirty buckets (the refresh signal, like delta_bytes for folds)."""
     from firebolt_cdc_lambda_spark.operators.bloom import BloomIndex
     kt = KeyedTable(spark, str(tmp_path / "h"), ["id"], num_buckets=4)
     kt.init(_rows(spark, range(100)).drop("Op", "load_timestamp"))
@@ -584,8 +569,7 @@ def test_refresh_many_equals_per_index_refresh(spark, tmp_path):
     partitions dropped — while sharing scans."""
     tables = {}
     for nm in ("a", "b"):
-        kt = KeyedTable(spark, str(tmp_path / nm), ["id"], num_buckets=4,
-                        delete_vectors=False)
+        kt = KeyedTable(spark, str(tmp_path / nm), ["id"], num_buckets=4)
         kt.init(_rows(spark, range(400)))
         kt.cluster_by(["ts"], max_records_per_file=25)
         StatsIndex.build_many(kt, ["ts", "id"])

@@ -274,3 +274,25 @@ def test_purge_null_version_tombstone_is_purgeable(spark, tmp_path):
                                version_col="load_timestamp") is True
     assert kt._read_raw().where(F.col(TOMBSTONE_COL)).count() == 0
     assert {r["id"] for r in kt.read().collect()} == {1}
+
+
+def test_retired_delete_vector_table_refuses_to_open(spark, tmp_path):
+    """A table whose stored meta records the retired delete-vector mode
+    kept its deletes only in a ``__dv`` sidecar no reader applies any
+    more: opening it would show every deleted row again, so the
+    constructor refuses and names the path.  A stored
+    ``"delete_vectors": false`` (what older writers recorded on every
+    table) still opens."""
+    import json
+    import re
+    kt = KeyedTable(spark, str(tmp_path / "t"), ["id"], num_buckets=2,
+                    tombstones=True)
+    kt.init(df_of(spark, [Row(id=1, v="a", load_timestamp=TS[0])]))
+    meta = json.loads(kt._read_sidecar("_meta.json"))
+    meta["delete_vectors"] = False
+    kt._write_sidecar("_meta.json", json.dumps(meta))
+    assert KeyedTable(spark, kt.path, ["id"]).tombstones is True
+    meta["delete_vectors"] = True
+    kt._write_sidecar("_meta.json", json.dumps(meta))
+    with pytest.raises(ValueError, match=re.escape(kt.path)):
+        KeyedTable(spark, kt.path, ["id"])

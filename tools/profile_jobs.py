@@ -87,9 +87,6 @@ def main() -> None:
     if want("bloom_lookup"):
         report(spark, "bloom_lookup (5 reps+build)",
                lambda: bench.bench_bloom_lookup(spark, sf_dir))
-    if want("dv_delete"):
-        report(spark, "dv_delete (5 reps+build)",
-               lambda: bench.bench_dv_delete(spark, sf_dir))
     if want("stats_scan"):
         report(spark, "stats_scan (5 reps+build)",
                lambda: bench.bench_stats_scan(spark, sf_dir))

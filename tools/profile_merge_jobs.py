@@ -4,7 +4,7 @@ small-batch KeyedTable merge — the per-job decomposition behind the
 cdc_merge_small_batch number.  Also covers lookup/bloom probes when
 asked.
 
-Usage: python tools/profile_merge_jobs.py [merge|dv|mor|lookup|bloom|jvfact|jvdim|stream]
+Usage: python tools/profile_merge_jobs.py [merge|mor|lookup|bloom|jvfact|jvdim|stream]
 """
 
 from __future__ import annotations
